@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.ops._
 
@@ -19,32 +21,11 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** File-source stream over one sf table. The testdata tables are
-    * single parquet FILES — the file source wants a directory, so
-    * stream the parent dir with a glob pinned to the leaf name. Scaled
-    * replicas ([[graft.io.ScaleReplicate]]) are parquet DIRECTORIES of
-    * part files — `pathGlobFilter` matches leaf *file* names only, so
-    * the same glob would silently stream zero files; stream the
-    * directory itself instead.
-    */
-  private def streamTable(s: SparkSession, dir: String, table: String) = {
-    val path = s"$dir/$table.parquet"
-    val schema = s.read.parquet(path).schema
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        s.readStream.schema(schema).parquet(path)
-      else
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", s"$table.parquet").parquet(dir)
-    // Same ts normalization as the batch loaders — watermarks and
-    // unix_micros both reject TIMESTAMP_NTZ, so streams must see a
-    // proper TimestampType regardless of the fixture's encoding.
-    Tables.normalizeTs(raw)
-  }
+  /** Source parquet bytes per state partition (see [[statePartitions]]). */
+  private val StatePartitionBytes = 8L << 20
 
-  /** Size a streaming query's state/shuffle partition count to its
-    * SOURCE BYTES instead of the core count, for the eager region of a
-    * streaming query (build → start → awaitTermination).
+  /** State/shuffle partition count for a streaming query over `path`,
+    * sized to its SOURCE BYTES instead of the core count.
     *
     * Stateful streaming disables AQE, so `spark.sql.shuffle.partitions`
     * is taken verbatim as the state-store partition count for the life
@@ -55,39 +36,109 @@ object SparkEntry {
     * MACHINE: the round-10 scaling block measured the stream-stream
     * joins running 2× FASTER at 8 cores than 32 purely because fewer
     * state partitions existed. Partitioning should follow the data
-    * (guide §2.2): one partition per `graft.stream.statePartitionBytes`
-    * of source parquet (default 32 MB compressed ≈ a few hundred MB of
-    * in-flight rows), clamped to [1, 4096]. The conf is restored before
-    * the query function returns; the post-stream comparison plans are
-    * lazy and execute under the caller's configuration as before.
+    * (guide §2.2): one partition per [[StatePartitionBytes]] (8 MB) of
+    * source parquet, clamped to [1, 4096].
+    *
+    * Bytes are read through the Hadoop FileSystem of the path's scheme,
+    * so HDFS/S3/`file:` sources size like local ones. A size of 0 says
+    * nothing about the data (an object store may not report lengths),
+    * so it keeps the session's own count rather than pinning the
+    * stream to one partition.
     */
-  private def withBoundedStreamState[T](s: SparkSession, paths: Seq[String])
-      (body: => T): T = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else f.length()
-    val bytes = paths.map(p => sizeOf(new java.io.File(p))).sum
-    val target = math.max(1L,
-      s.conf.get("graft.stream.statePartitionBytes", (8L << 20).toString).toLong)
-    val parts = math.max(1L, math.min(4096L, (bytes + target - 1) / target))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private[graft] def statePartitions(s: SparkSession, path: String): Int = {
+    val p = new Path(path)
+    val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    if (bytes <= 0) s.conf.get("spark.sql.shuffle.partitions").toInt
+    else math.min(4096L, (bytes + StatePartitionBytes - 1) / StatePartitionBytes).toInt
   }
 
-  /** [[withBoundedStreamState]] keyed by sf-table names — the wrapper
-    * every STATEFUL `q_st*` entry applies to its whole (eager) body.
-    * The foreachBatch store-backed streams (q_st8/q_st17/q_st20/q_st23)
-    * are deliberately NOT wrapped: their state lives in bucketed tables,
-    * not in streaming state stores, so the bound saves nothing there —
-    * and it throttles their inner batch pipelines' CPU parallelism
-    * (q_st20 measured +3-5 s wrapped at 32 cores, same harness).
+  /** The one entry every `q_st*` gate over an sf table runs through:
+    * opens `table` as a file-source stream and hands it to `fn`.
+    *
+    * The testdata tables are single parquet FILES — the file source
+    * wants a directory, so stream the parent dir with a glob pinned to
+    * the leaf name. Scaled replicas ([[graft.io.ScaleReplicate]]) are
+    * parquet DIRECTORIES of part files — `pathGlobFilter` matches leaf
+    * *file* names only, so the same glob would silently stream zero
+    * files; stream the directory itself instead.
+    *
+    * With `boundState` (every STATEFUL gate) the whole eager body
+    * (build → start → awaitTermination) runs under [[statePartitions]]
+    * of the table; the conf is restored before the gate returns, and the
+    * post-stream comparison plans are lazy and execute under the
+    * caller's configuration as before. The foreachBatch store-backed
+    * streams run unbounded (q_st8/q_st17/q_st23 pass `boundState =
+    * false`; q_st20 streams its own CSV fixture): their state lives in
+    * bucketed tables, not in streaming state stores, so the bound saves
+    * nothing there — and it throttles their inner batch pipelines' CPU
+    * parallelism (q_st20 measured +3-5 s wrapped at 32 cores, same
+    * harness).
     */
-  private def streamQ(tables: String*)(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, dir) => withBoundedStreamState(
-      s, tables.map(tb => s"$dir/$tb.parquet"))(fn(s, dir))
+  private def streamGate(table: String, boundState: Boolean = true)
+      (fn: (SparkSession, String, DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val path = s"$dir/$table.parquet"
+    val hp = new Path(path)
+    val schema = s.read.parquet(path).schema
+    val raw =
+      if (hp.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(hp).isDirectory)
+        s.readStream.schema(schema).parquet(path)
+      else
+        s.readStream.schema(schema)
+          .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    // Same ts normalization as the batch loaders — watermarks and
+    // unix_micros both reject TIMESTAMP_NTZ, so streams must see a
+    // proper TimestampType regardless of the fixture's encoding.
+    val stream = Tables.normalizeTs(raw)
+    if (!boundState) fn(s, dir, stream)
+    else {
+      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s, path).toString)
+      try fn(s, dir, stream)
+      finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+  }
+
+  /** Run a stream to completion: one AvailableNow trigger, blocking
+    * until all the input the source holds is consumed. */
+  private def drain(w: DataStreamWriter[Row]): Unit = {
+    import org.apache.spark.sql.streaming.Trigger
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+  }
+
+  /** Drain `df` into the memory-sink table `name` (replacing any earlier
+    * one) and return it: the verification edge of the memory-sink gates. */
+  private def toMemory(df: DataFrame, name: String, mode: String): DataFrame = {
+    df.sparkSession.catalog.dropTempView(name)
+    drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** A sink-backed gate's store `name` and its `out`/`ckpt` paths. */
+  private case class GateScratch(name: String, out: String, ckpt: String)
+
+  /** [[GateScratch]] scoped per (application, dir) so concurrent
+    * sessions, the bench's base/scaled passes and a lazily read earlier
+    * result never clobber each other; cleared up front (out, ckpt, and
+    * the tables `name + suffix`, `""` naming the store itself, with their
+    * warehouse dirs) so reruns stay idempotent.
+    */
+  private def freshScratch(s: SparkSession, tag: String, dir: String,
+      tableSuffixes: String*): GateScratch = {
+    val name = ExtQueries.scratchTable(s, tag, dir)
+    val sc = GateScratch(name,
+      new java.io.File(s"target/${name}_out").getAbsolutePath,
+      new java.io.File(s"target/${name}_ckpt").getAbsolutePath)
+    tableSuffixes.map(name + _).foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
+    val warehouse = s.conf.get("spark.sql.warehouse.dir")
+    (Seq(sc.out, sc.ckpt).map(new Path(_)) ++ tableSuffixes.map(x =>
+      new Path(warehouse, (name + x).toLowerCase))).foreach { path =>
+      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(path)) fs.delete(path, true)
+    }
+    sc
+  }
 
   /** Exact decimal sum of a double column, surfaced back as double. */
   private def dsum(c: Column, scale: Int = 2): Column =
@@ -397,10 +448,14 @@ object SparkEntry {
         .agg(round(avg(col("value")), 6).as("v"))
       val byKey = Window.partitionBy("event_type").orderBy("bucket_start")
       val win3 = byKey.rowsBetween(-1, 1)
+      // Decimal mean: a 2-row frame at a partition edge averages two 6-dp
+      // values onto an exact half-unit tie, which a double mean rounds
+      // either way (Spark and DuckDB differ); the decimal tie rounds HALF_UP.
       series.select(
         col("event_type"),
         col("bucket_start"),
-        round(avg(col("v")).over(win3), 6).as("smooth3"),
+        round(avg(col("v").cast("decimal(20,6)")).over(win3), 6)
+          .cast("double").as("smooth3"),
         round(col("v") - lag(col("v"), 1).over(byKey), 6).as("delta"),
         count(lit(1)).over(win3).cast("long").as("support"))
     }),
@@ -871,16 +926,10 @@ object SparkEntry {
     // append+watermark production path is spec-gated in
     // streaming/StreamResampleSpec). The streamed answer must equal the
     // batch groupBy bit-for-bit, which the DuckDB oracle pins.
-    "q_st1_stream_resample" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val events = streamTable(s, dir, "events")
+    "q_st1_stream_resample" -> streamGate("events")((_, _, events) => {
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), extraKeys = Seq("event_type"))
-      s.catalog.dropTempView("g_st1")
-      val q = agg.writeStream.format("memory").queryName("g_st1")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st1").select(
+      toMemory(agg, "g_st1", "complete").select(
         TimeOps.epochSeconds(col("time")).as("bucket_start"),
         col("event_type"),
         round(col("value"), 6).as("avg_value"),
@@ -899,17 +948,11 @@ object SparkEntry {
     // The 500 ms delay fraction keeps the watermark off the
     // second-aligned window-end lattice, so the <=-vs-< eviction
     // boundary can never bite regardless of the fixture's max(ts).
-    "q_st10_stream_late" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val events = streamTable(s, dir, "events")
+    "q_st10_stream_late" -> streamGate("events")((_, _, events) => {
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), watermark = "7200500 milliseconds",
         extraKeys = Seq("event_type"))
-      s.catalog.dropTempView("g_st10")
-      val q = agg.writeStream.format("memory").queryName("g_st10")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st10").select(
+      toMemory(agg, "g_st10", "append").select(
         TimeOps.epochSeconds(col("time")).as("bucket_start"),
         col("event_type"),
         round(col("value"), 6).as("avg_value"),
@@ -920,16 +963,10 @@ object SparkEntry {
     // document stream (append mode; state = 8-byte fingerprints only).
     // Projecting JUST the fingerprint keeps the emitted set independent
     // of arrival order, so the batch DISTINCT oracle pins it exactly.
-    "q_st2_stream_dedup" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val docs = streamTable(s, dir, "documents")
+    "q_st2_stream_dedup" -> streamGate("documents")((_, _, docs) => {
       val fp = docs.select(substring(md5(col("text")), 1, 16).as("fp"))
         .dropDuplicates("fp")
-      s.catalog.dropTempView("g_st2")
-      val q = fp.writeStream.format("memory").queryName("g_st2")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st2")
+      toMemory(fp, "g_st2", "append")
     }),
 
     // §2.10 driver-gated custom state: the flatMapGroupsWithState
@@ -938,21 +975,15 @@ object SparkEntry {
     // reproducible in epoch-seconds SQL; a single AvailableNow batch
     // (one source file, default maxFilesPerTrigger) makes the per-group
     // fold order the tracker's own within-batch sort.
-    "q_st3_stream_tracker" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st3_stream_tracker" -> streamGate("events")((s, _, events) => {
       val sp = s
       import sp.implicits._
-      val events = streamTable(s, dir, "events")
       val obs = events.select(
           col("user_id").cast("string").as("station"),
           date_trunc("second", col("ts")).as("time"))
         .as[graft.streaming.StatefulTracker.Obs]
       val tracked = graft.streaming.StatefulTracker.track(obs).toDF()
-      s.catalog.dropTempView("g_st3")
-      val q = tracked.writeStream.format("memory").queryName("g_st3")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st3").select(
+      toMemory(tracked, "g_st3", "append").select(
         col("station"),
         col("n"),
         TimeOps.epochSeconds(col("last")).as("last_sec"),
@@ -964,53 +995,37 @@ object SparkEntry {
     // READ BACK — output-commit correctness, not just in-memory state.
     // Output and checkpoint are cleared first so the query is
     // idempotent across driver runs.
-    "q_st5_stream_file_sink" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val out = new java.io.File("target/g_st5_out").getAbsolutePath
-      val ckpt = new java.io.File("target/g_st5_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-      val docs = streamTable(s, dir, "documents")
+    "q_st5_stream_file_sink" -> streamGate("documents")((s, dir, docs) => {
+      val sc = freshScratch(s, "g_st5", dir)
       val fp = docs.select(col("doc_id"),
         substring(md5(col("text")), 1, 16).as("fp"))
-      val q = fp.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out)
+      drain(fp.writeStream.format("parquet")
+        .option("path", sc.out).option("checkpointLocation", sc.ckpt))
+      s.read.parquet(sc.out)
     }),
 
     // §2.10 driver-gated stream-STREAM interval join: clicks correlated
     // to same-user purchases within the following 10 minutes, both
     // sides live streams with watermarks (the state-eviction contract).
-    // Batch-equality assumption (pinned): streamTable sets no
+    // Batch-equality assumption (pinned): streamGate sets no
     // maxFilesPerTrigger, so AvailableNow delivers the whole fixture in
     // ONE micro-batch and the 30-minute watermark never advances past
     // unprocessed rows — the emitted set then equals the batch interval
     // join the oracle runs. Splitting ingestion into multiple batches
     // (e.g. adding maxFilesPerTrigger) would let the watermark drop
     // out-of-order rows and flake this gate; keep single-batch here.
-    "q_st6_stream_join" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      def ev() = streamTable(s, dir, "events")
-      val clicks = ev().filter(col("event_type") === "click")
+    "q_st6_stream_join" -> streamGate("events")((_, _, events) => {
+      val clicks = events.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
-      val purchases = ev().filter(col("event_type") === "purchase")
+      val purchases = events.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           col("ts").as("purchase_ts"))
       val joined = graft.streaming.StreamJoin.intervalJoin(
           clicks, purchases, Seq("user_id"), "click_ts", "purchase_ts",
           minLagSec = 0L, maxLagSec = 600L, watermarkDelay = "30 minutes")
         .select(col("click_id"), col("purchase_id"))
-      s.catalog.dropTempView("g_st6")
-      val q = joined.writeStream.format("memory").queryName("g_st6")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st6")
+      toMemory(joined, "g_st6", "append")
     }),
 
     // §2.10 driver-gated LEFT OUTER stream-stream interval join — the
@@ -1024,13 +1039,11 @@ object SparkEntry {
     // stream are withheld in state and never emit — also replayed.
     // The 500 ms delay fraction keeps the eviction boundary off any
     // second-aligned timestamp lattice (same defense as q_st10).
-    "q_st11_stream_join_outer" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      def ev() = streamTable(s, dir, "events")
-      val clicks = ev().filter(col("event_type") === "click")
+    "q_st11_stream_join_outer" -> streamGate("events")((_, _, events) => {
+      val clicks = events.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
-      val purchases = ev().filter(col("event_type") === "purchase")
+      val purchases = events.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           col("ts").as("purchase_ts"))
       val joined = graft.streaming.StreamJoin.intervalJoinLeftOuter(
@@ -1038,11 +1051,7 @@ object SparkEntry {
           minLagSec = 0L, maxLagSec = 600L,
           watermarkDelay = "1800500 milliseconds")
         .select(col("click_id"), col("purchase_id"))
-      s.catalog.dropTempView("g_st11")
-      val q = joined.writeStream.format("memory").queryName("g_st11")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st11")
+      toMemory(joined, "g_st11", "append")
     }),
 
     // §2.10 driver-gated streaming NEAR-DUP ingest: the continuous form
@@ -1056,20 +1065,8 @@ object SparkEntry {
     // would legitimately pick different cluster canonicals across
     // batches; the multi-batch ORDER semantics are spec-pinned in
     // StreamNearDupSpec instead.)
-    "q_st8_stream_neardup" -> ((s, dir) => {
-      // store/out/ckpt scoped per (application, dir) so concurrent
-      // sessions and the bench's base/scaled passes never clobber each
-      // other; cleared up front so reruns stay idempotent
-      val store = ExtQueries.scratchTable(s, "g_st8_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-      Seq(s"${store}_bands", s"${store}_sigs")
-        .foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
+    "q_st8_stream_neardup" -> streamGate("documents", boundState = false)((s, dir, docs) => {
+      val sc = freshScratch(s, "g_st8_store", dir, "_bands", "_sigs")
       // %5 subsample + base-replica pin: the gate compares TWO full
       // pair-detections + two cluster closures (stream path and batch
       // reference), so its cost is GATE cost, not operator cost — and
@@ -1083,12 +1080,11 @@ object SparkEntry {
       // probes (q_ext_dedup_incremental_near) scale with the corpus.
       val gateSet = col("doc_id") % 5 === 0 &&
         col("doc_id") < graft.io.ScaleReplicate.KeyShift
-      val docs = streamTable(s, dir, "documents").filter(gateSet)
       val q = graft.streaming.StreamNearDup.ingest(
-        docs, "doc_id", "text", store, out, ckpt,
+        docs.filter(gateSet), "doc_id", "text", sc.name, sc.out, sc.ckpt,
         minJaccard = 0.7, minEst = 0.5)
       q.awaitTermination()
-      val streamKept = s.read.parquet(out).select(col("doc_id"))
+      val streamKept = s.read.parquet(sc.out).select(col("doc_id"))
       val static = Tables.documents(s, dir).filter(gateSet)
       val batchKept = graft.ext.Dedup.keepCanonical(static, "doc_id",
           graft.ext.Dedup.minHashPairs(static, "doc_id", "text", minJaccard = 0.7))
@@ -1102,20 +1098,19 @@ object SparkEntry {
       val eq = merged.agg(
         (count(lit(1)) > 0).cast("long").as("any_rows"),
         min(col("k") === 2).cast("long").as("stream_matches_batch"))
-      val grew = s.table(s"${store}_bands")
+      val grew = s.table(s"${sc.name}_bands")
         .agg((count(lit(1)) > 0).cast("long").as("store_has_bands"))
       eq.crossJoin(grew)
     }),
 
     // §2.10 driver-gated BUILT-IN session windows: Spark's native
     // session_window() grouping (dynamic-gap session aggregation in
-    // the engine, complementing the custom flatMapGroupsWithState
-    // sessionizer) run to completion — the emitted (user, session
+    // the engine) run to completion — the emitted (user, session
     // start, count) set must equal the batch gap-sessionization the
-    // oracle computes with lag + running sum.
-    "q_st7_session_window" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val events = streamTable(s, dir, "events")
+    // oracle computes with lag + running sum. It emits every session,
+    // the still-open last one per user included, which a
+    // flatMapGroupsWithState sessionizer closing on gap/timeout does not.
+    "q_st7_session_window" -> streamGate("events")((_, _, events) => {
       // whole-second truncation (as q_st3): sub-second parts would make
       // the oracle's epoch-seconds gap arithmetic diverge at boundaries
       val agg = events
@@ -1123,11 +1118,7 @@ object SparkEntry {
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"))
-      s.catalog.dropTempView("g_st7")
-      val q = agg.writeStream.format("memory").queryName("g_st7")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st7").select(
+      toMemory(agg, "g_st7", "complete").select(
         col("user_id"),
         TimeOps.epochSeconds(col("session_window.start")).as("session_start"),
         col("n_events"))
@@ -1138,23 +1129,16 @@ object SparkEntry {
     // outage. Single AvailableNow batch + within-batch (ts, id) sort
     // makes the emitted set bit-identical to the batch operator, so
     // this query SHARES the q_ext_gaps oracle.
-    "q_st9_stream_gaps" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st9_stream_gaps" -> streamGate("events")((s, _, events) => {
       val sp = s
       import sp.implicits._
-      val events = streamTable(s, dir, "events")
-        .withColumn("ts", unix_micros(col("ts")))
-      val obs = events.select(
+      val obs = events.withColumn("ts", unix_micros(col("ts"))).select(
           col("event_type").as("key"),
           col("ts").as("tsUs"),
           col("event_id").as("id"))
         .as[graft.streaming.StreamGaps.GapObs]
       val out = graft.streaming.StreamGaps.gaps(obs, 3600L).toDF()
-      s.catalog.dropTempView("g_st9")
-      val q = out.writeStream.format("memory").queryName("g_st9")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st9").select(
+      toMemory(out, "g_st9", "append").select(
         col("key").as("event_type"),
         col("gap_start_us"), col("gap_end_us"), col("gap_us"),
         expr("gap_us div 1000000").as("gap_seconds"))
@@ -1167,19 +1151,13 @@ object SparkEntry {
     // for ANY merge order, so the gate is robust to micro-batch
     // boundaries; with the fixture's single AvailableNow batch it
     // shares q_ext_heavy_hitters' oracle outright.
-    "q_st12_stream_heavy_hitters" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st12_stream_heavy_hitters" -> streamGate("documents")((s, dir, documents) => {
       val k = 40
-      val words = streamTable(s, dir, "documents")
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      val words = documents.select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(col("w") =!= "")
       val mg = udaf(graft.ext.HeavyHitters.MisraGries(k))
       val agg = words.agg(mg(col("w")).as("summary"))
-      s.catalog.dropTempView("g_st12")
-      val q = agg.writeStream.format("memory").queryName("g_st12")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val summary = s.table("g_st12")
+      val summary = toMemory(agg, "g_st12", "complete")
       val batchWords = Tables.documents(s, dir)
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(col("w") =!= "")
@@ -1204,16 +1182,10 @@ object SparkEntry {
     // id). The per-window estimate is arrival-order- and
     // batch-boundary-independent, so the gate hash-checks the batch
     // exact counts and pins the ±10% (≫3σ at rsd=0.02) contract.
-    "q_st13_stream_distinct" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val events = streamTable(s, dir, "events")
+    "q_st13_stream_distinct" -> streamGate("events")((s, dir, events) => {
       val agg = graft.streaming.StreamDistinct.windowedApproxDistinct(
         events, "ts", "user_id", Seq("event_type"), windowMinutes = 60)
-      s.catalog.dropTempView("g_st13")
-      val q = agg.writeStream.format("memory").queryName("g_st13")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val est = s.table("g_st13").select(
+      val est = toMemory(agg, "g_st13", "complete").select(
         TimeOps.epochSeconds(col("window.start")).as("bucket_start"),
         col("event_type"), col("approx_distinct"))
       val exact = Tables.events(s, dir)
@@ -1233,19 +1205,13 @@ object SparkEntry {
     // §2.10 driver-gated stream-static enrichment: per-event broadcast
     // lookup against a static dimension, streamed to completion — must
     // equal the batch join row-for-row.
-    "q_st4_stream_enrich" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val raw = streamTable(s, dir, "events")
+    "q_st4_stream_enrich" -> streamGate("events")((s, dir, raw) => {
       val stream = raw.select(col("event_id"),
         pmod(col("user_id"), lit(25)).as("n_nationkey"))
       val dim = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
       val enriched = graft.streaming.StreamEnrich.enrich(stream, dim, Seq("n_nationkey"))
         .select(col("event_id"), col("n_name"))
-      s.catalog.dropTempView("g_st4")
-      val q = enriched.writeStream.format("memory").queryName("g_st4")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st4")
+      toMemory(enriched, "g_st4", "append")
     }),
 
     // §2.10 ext: stream-static anomaly scoring — each live row joins
@@ -1253,13 +1219,11 @@ object SparkEntry {
     // stream side never shuffles) and carries its deviation. The
     // monitoring loop the reference's batch compare feeds, made
     // continuous; equals the batch join row-for-row.
-    "q_st14_stream_climatology" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st14_stream_climatology" -> streamGate("events")((s, dir, events) => {
       val profile = graft.ops.Climatology.profile(
         Tables.events(s, dir), "event_type", "ts", "value")
         .select(col("event_type"), col("hour"), col("clim_mean"))
-      val stream = streamTable(s, dir, "events")
-        .filter(col("event_id") % 13 === 0)
+      val stream = events.filter(col("event_id") % 13 === 0)
         .select(col("event_type"), col("event_id"),
           hour(col("ts")).as("hour"), round(col("value"), 6).as("value_r"))
       val scored = graft.streaming.StreamEnrich
@@ -1267,11 +1231,7 @@ object SparkEntry {
         .select(col("event_type"), col("event_id"), col("hour"),
           col("value_r"), col("clim_mean"),
           round(col("value_r") - col("clim_mean"), 6).as("anomaly"))
-      s.catalog.dropTempView("g_st14")
-      val q = scored.writeStream.format("memory").queryName("g_st14")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st14")
+      toMemory(scored, "g_st14", "append")
     }),
 
     // §2.10 ext: STREAMING geo radius join — each live event (coords
@@ -1281,10 +1241,8 @@ object SparkEntry {
     // stateless (map-side cell expand + stream-static join), so
     // append mode needs no watermark. Equals the batch join
     // row-for-row.
-    "q_st15_stream_radius" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val probes = streamTable(s, dir, "events")
-        .filter(col("event_id") % 29 === 0)
+    "q_st15_stream_radius" -> streamGate("events")((s, dir, events) => {
+      val probes = events.filter(col("event_id") % 29 === 0)
         .select(col("event_id").as("id"),
           (lit(-11.0) + (col("user_id") * 43 % 2200) / lit(100.0)).as("lat"),
           (lit(95.0) + (col("user_id") * 61 % 4600) / lit(100.0)).as("lon"))
@@ -1294,11 +1252,7 @@ object SparkEntry {
           (lit(95.0) + (col("s_suppkey") * 53 % 4600) / lit(100.0)).as("lon"))
       val within = graft.ops.Spatial.radiusJoinGrid(
         probes, "id", stations, "station_id", radiusKm = 150.0, cellDeg = 2.0)
-      s.catalog.dropTempView("g_st15")
-      val q = within.writeStream.format("memory").queryName("g_st15")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st15")
+      toMemory(within, "g_st15", "append")
     }),
 
     // §2.10 ext: STREAMING model-calibration monitoring — the batch
@@ -1307,21 +1261,15 @@ object SparkEntry {
     // rows), no watermark needed, and the final table equals the
     // batch curve bit-for-bit. Score is per-row md5 noise, label a
     // value threshold, so the whole gate is oracle-replayable.
-    "q_st16_stream_reliability" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val stream = streamTable(s, dir, "events")
-        .select(
-          (conv(substring(md5(concat(lit("rel"),
-            col("event_id").cast("string"))), 1, 3), 16, 10)
-            .cast("long").cast("double") / 4096.0).as("score"),
-          (col("value") >= 50.0).as("good"))
+    "q_st16_stream_reliability" -> streamGate("events")((_, _, events) => {
+      val stream = events.select(
+        (conv(substring(md5(concat(lit("rel"),
+          col("event_id").cast("string"))), 1, 3), 16, 10)
+          .cast("long").cast("double") / 4096.0).as("score"),
+        (col("value") >= 50.0).as("good"))
       val curve = graft.ext.Reliability.curve(stream, "score", "good",
         bins = 10)
-      s.catalog.dropTempView("g_st16")
-      val q = curve.writeStream.format("memory").queryName("g_st16")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st16")
+      toMemory(curve, "g_st16", "complete")
     }),
 
     // §2.10 ext: STREAMING histogram-store ingest — each micro-batch
@@ -1331,29 +1279,16 @@ object SparkEntry {
     // addition, the stream-built store's range quantiles equal the
     // batch-built store's bit-for-bit, and the oracle replays them
     // from raw data.
-    "q_st17_stream_quantile_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val store = ExtQueries.scratchTable(s, "g_st17_hist", dir)
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      val cp = new org.apache.hadoop.fs.Path(ckpt)
-      val fsys = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fsys.exists(cp)) fsys.delete(cp, true)
-      s.sql(s"DROP TABLE IF EXISTS `$store`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), store.toLowerCase)
-      val wfs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (wfs.exists(loc)) wfs.delete(loc, true)
+    "q_st17_stream_quantile_ingest" -> streamGate("events", boundState = false)((s, dir, ev) => {
+      val sc = freshScratch(s, "g_st17_hist", dir, "")
       val lo = 0.0; val hi = 500.0; val bins = 250
-      val q = streamTable(s, dir, "events").writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.ext.HistogramStore.ingest(batch, "ts", "value", store,
+      drain(ev.writeStream
+        .option("checkpointLocation", sc.ckpt)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.ext.HistogramStore.ingest(batch, "ts", "value", sc.name,
             lo, hi, bins)
-        }
-        .start()
-      q.awaitTermination()
-      graft.ext.HistogramStore.rangeQuantiles(s, store,
+        })
+      graft.ext.HistogramStore.rangeQuantiles(s, sc.name,
         "2024-01-08", "2024-01-22", Seq(50, 90, 99), lo, hi, bins)
     }),
 
@@ -1362,21 +1297,16 @@ object SparkEntry {
     // bins-row state), then the PSI algebra runs between the streamed
     // counts and the frozen batch reference; equals the batch PSI
     // bit-for-bit because the bin counts are exact integers.
-    "q_st18_stream_psi" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st18_stream_psi" -> streamGate("events")((s, dir, events) => {
       val lo = 0.0; val hi = 500.0; val bins = 10
       val binsStream = graft.ext.Drift.psiBinned(
-        streamTable(s, dir, "events")
-          .filter(col("event_type") === "click"),
+        events.filter(col("event_type") === "click"),
         "value", lo, hi, bins, "ca")
-      s.catalog.dropTempView("g_st18")
-      val q = binsStream.writeStream.format("memory").queryName("g_st18")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val aCounts = toMemory(binsStream, "g_st18", "complete")
       val bCounts = graft.ext.Drift.psiBinned(
         Tables.events(s, dir).filter(col("event_type") === "view"),
         "value", lo, hi, bins, "cb")
-      graft.ext.Drift.psiFromCounts(s.table("g_st18"), bCounts, bins)
+      graft.ext.Drift.psiFromCounts(aCounts, bCounts, bins)
     }),
 
     // §2.10 ext: STREAMING erasure enforcement — live ingest filtered
@@ -1384,23 +1314,17 @@ object SparkEntry {
     // left-outer + null filter, so deleted keys can never re-enter the
     // corpus between batch erasure runs. Audit equals the batch
     // anti-join exactly (count + decimal key-sum).
-    "q_st19_stream_tombstone" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st19_stream_tombstone" -> streamGate("documents")((s, dir, documents) => {
       val tomb = Tables.documents(s, dir)
         .filter(col("doc_id") % 37 === 0)
         .select(col("doc_id")).withColumn("__t", lit(1))
-      val kept = streamTable(s, dir, "documents")
-        .select(col("doc_id"))
+      val kept = documents.select(col("doc_id"))
         .join(broadcast(tomb), Seq("doc_id"), "left_outer")
         .filter(col("__t").isNull)
         .select(col("doc_id"))
-      s.catalog.dropTempView("g_st19")
-      val q = kept.writeStream.format("memory").queryName("g_st19")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // BIGINT key sum (not DECIMAL(38,0)): decimal cells hash-rendered
       // engine-differently at the driver while value-exact locally (r6)
-      s.table("g_st19").agg(count(lit(1)).as("n_kept"),
+      toMemory(kept, "g_st19", "append").agg(count(lit(1)).as("n_kept"),
         sum(col("doc_id")).as("key_sum"))
     }),
 
@@ -1417,16 +1341,7 @@ object SparkEntry {
     // and in-batch canonical selection keeps the min id.
     "q_st20_stream_neardup_order" -> ((s, dir) => {
       val srcDir = graft.io.VerifyFixtures.streamNearDupFixture()
-      val store = ExtQueries.scratchTable(s, "g_st20_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-      Seq(s"${store}_bands", s"${store}_sigs")
-        .foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
+      val sc = freshScratch(s, "g_st20_store", dir, "_bands", "_sigs")
       val docs = s.readStream
         .schema("id STRING, text STRING")
         .option("header", "true")
@@ -1434,10 +1349,10 @@ object SparkEntry {
         .csv(srcDir)
         .select(col("id").cast("long").as("doc_id"), col("text"))
       val q = graft.streaming.StreamNearDup.ingest(
-        docs, "doc_id", "text", store, out, ckpt,
+        docs, "doc_id", "text", sc.name, sc.out, sc.ckpt,
         minJaccard = 0.9, minEst = 0.9)
       q.awaitTermination()
-      s.read.parquet(out)
+      s.read.parquet(sc.out)
         .select(col("doc_id"), substring(md5(col("text")), 1, 16).as("fp"))
     }),
 
@@ -1452,8 +1367,7 @@ object SparkEntry {
     // by the KeyShift pin (a design constant, not a data fraction).
     // Gate: streamed per-cell (count, id-sum) equals the batch
     // inverted-file build exactly.
-    "q_st21_stream_ann_ingest" -> streamQ("embeddings")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
+    "q_st21_stream_ann_ingest" -> streamGate("embeddings")((s, dir, embeddings) => {
       val cents = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 7 &&
           col("vec_id") < graft.io.ScaleReplicate.KeyShift)
@@ -1461,17 +1375,12 @@ object SparkEntry {
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .sortBy(_._1).toSeq
-      val counts = streamTable(s, dir, "embeddings")
-        .select(col("vec_id"),
+      val counts = embeddings.select(col("vec_id"),
           graft.ext.Similarity.nearestCellExpr(
             col("embedding").cast("array<double>"), cents).as("cell"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
-      s.catalog.dropTempView("g_st21")
-      val q = counts.writeStream.format("memory").queryName("g_st21")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st21")
+      toMemory(counts, "g_st21", "complete")
     }),
 
     // Streaming ε-DP counts: the live per-language count is ordinary
@@ -1480,16 +1389,10 @@ object SparkEntry {
     // q_ext_dp_counts gates) is applied ONCE to the final state, never
     // per micro-batch (per-batch noise would compound the ε spend).
     // The gate pins streamed-state-then-release == the batch query.
-    "q_st22_stream_dp_counts" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val counts = streamTable(s, dir, "documents")
-        .groupBy(col("lang")).agg(count(lit(1)).as("true_n"))
-      s.catalog.dropTempView("g_st22")
-      val q = counts.writeStream.format("memory").queryName("g_st22")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.ext.Privacy.dpRelease(s.table("g_st22"), "lang", "true_n",
-        eps = 0.5)
+    "q_st22_stream_dp_counts" -> streamGate("documents")((_, _, documents) => {
+      val counts = documents.groupBy(col("lang")).agg(count(lit(1)).as("true_n"))
+      graft.ext.Privacy.dpRelease(toMemory(counts, "g_st22", "complete"),
+        "lang", "true_n", eps = 0.5)
     }),
 
     // §2.10 driver-gated streaming record linkage: the Fellegi–Sunter
@@ -1503,23 +1406,14 @@ object SparkEntry {
     // comparison to safe-alphabet BIGINT cells (count + id/score sums
     // both sides, min over per-pair agreement). Multi-batch cross-store
     // semantics are spec-pinned in StreamLinkageSpec instead.
-    "q_st23_stream_linkage" -> ((s, dir) => {
-      val store = ExtQueries.scratchTable(s, "g_st23_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-      s.sql(s"DROP TABLE IF EXISTS `$store`")
-      val records = ExtQueries.linkageRecords(streamTable(s, dir, "customer"))
+    "q_st23_stream_linkage" -> streamGate("customer", boundState = false)((s, dir, cust) => {
+      val sc = freshScratch(s, "g_st23_store", dir, "")
       val q = graft.streaming.StreamLinkage.ingest(
-        records, "rid", Seq("nation", "block"), ExtQueries.linkageScores,
-        matchMin = 10L, possibleMin = 1L, storeName = store,
-        outPath = out, checkpoint = ckpt)
+        ExtQueries.linkageRecords(cust), "rid", Seq("nation", "block"),
+        ExtQueries.linkageScores, matchMin = 10L, possibleMin = 1L,
+        storeName = sc.name, outPath = sc.out, checkpoint = sc.ckpt)
       q.awaitTermination()
-      val streamed = s.read.parquet(out)
+      val streamed = s.read.parquet(sc.out)
         .select(col("id_a"), col("id_b"), col("score"), col("verdict"))
       val batch = ExtQueries.queries("q_ext_record_linkage")(s, dir)
       val merged = streamed.withColumn("src", lit(1))
@@ -1806,14 +1700,19 @@ object SparkEntry {
       """WITH s AS (
         |  SELECT event_type, CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
         |         round(avg(value), 6) AS v
-        |  FROM events GROUP BY 1, 2)
+        |  FROM events GROUP BY 1, 2),
+        |w AS (
+        |  SELECT event_type, bucket_start, v,
+        |    sum(CAST(round(v * 1000000) AS BIGINT)) OVER f AS micros,
+        |    count(*) OVER f AS support
+        |  FROM s
+        |  WINDOW f AS (PARTITION BY event_type ORDER BY bucket_start
+        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING))
         |SELECT event_type, bucket_start,
-        |  round(avg(v) OVER (PARTITION BY event_type ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 6) AS smooth3,
+        |  sign(micros) * ((abs(micros) * 2 + support) // (2 * support)) / 1e6 AS smooth3,
         |  round(v - lag(v) OVER (PARTITION BY event_type ORDER BY bucket_start), 6) AS delta,
-        |  count(*) OVER (PARTITION BY event_type ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS support
-        |FROM s""".stripMargin,
+        |  support
+        |FROM w""".stripMargin,
 
     "q_u2_except" ->
       """SELECT user_id FROM events WHERE event_type = 'click'

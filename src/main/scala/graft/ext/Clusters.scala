@@ -54,7 +54,11 @@ object Clusters {
       srcCol: String,
       dstCol: String,
       maxIterations: Int = 25): DataFrame = {
+    // Materialized once: the input plan (typically a whole MinHash pair
+    // detection) feeds both the node set and the edge set below, and an
+    // unmaterialized `raw` would execute it once for each.
     val raw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+      .localCheckpoint(true)
     val allNodes = raw.select(col("a").as("node"))
       .union(raw.select(col("b").as("node")))
       .distinct()

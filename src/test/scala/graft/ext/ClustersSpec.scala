@@ -1,5 +1,7 @@
 package graft.ext
 
+import org.apache.spark.sql.functions.{col, udf}
+
 import graft.SparkTestBase
 
 class ClustersSpec extends SparkTestBase {
@@ -44,6 +46,16 @@ class ClustersSpec extends SparkTestBase {
     val out = Clusters.connectedComponents(path, "id_a", "id_b")
       .as[(Long, Long)].collect()
     assert(out.length === 1001 && out.forall(_._2 == 0L))
+  }
+
+  test("the input edge plan executes once, not once per derived node/edge set") {
+    val inputRows = spark.sparkContext.longAccumulator("cc_input_rows")
+    val seen = udf { (x: Long) => inputRows.add(1); x }.asNondeterministic()
+    val chain = spark.range(0L, 40L)
+      .select(seen(col("id")).as("id_a"), (col("id") + 1).as("id_b"))
+    val out = Clusters.connectedComponents(chain, "id_a", "id_b").collect()
+    assert(out.length === 41)
+    assert(inputRows.value === 40L)
   }
 
   test("an impossible cap fails loudly instead of returning a partial closure") {
